@@ -12,18 +12,15 @@ import org.apache.spark.sql.functions._
  */
 object Tables {
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // The testdata `events.ts` column has shipped as parquet
-    // TIMESTAMP(NANOS) in some generations, which Spark's vectorized
-    // reader rejects; read it as a long (ns since epoch) and convert in
-    // the adapter below. Dynamic conf, safe to set repeatedly.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** Reads one testdata table. Touches no session conf: a TIMESTAMP(NANOS)
+    * column needs `spark.sql.legacy.parquet.nanosAsLong`, which
+    * [[Session.local]] sets once for the whole session. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
-  }
 
   def events(spark: SparkSession, dir: String): DataFrame = {
     // The generator has shipped `ts` two ways across testdata
-    // generations: TIMESTAMP(NANOS) (which the nanosAsLong conf above
+    // generations: TIMESTAMP(NANOS) (which the session's nanosAsLong conf
     // surfaces as a BIGINT of epoch-nanos) and plain timestamp[us]
     // (which arrives as TIMESTAMP_NTZ). Every engine query — and
     // [[eventTimeExpr]] — is written against the CANONICAL form, epoch-
@@ -59,7 +56,7 @@ object Tables {
 
   /** The ns-long → microsecond TIMESTAMP_NTZ conversion for `events.ts` —
     * the single definition of the truncation rule every query must share
-    * (matches DuckDB's ns→µs read truncation; see table()). */
+    * (matches DuckDB's ns→µs read truncation; see events()). */
   val eventTimeExpr: String = "CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)"
 
   /**
@@ -68,7 +65,7 @@ object Tables {
    * needed columns (value/props excluded unless asked for).
    */
   def clickstream(spark: SparkSession, dir: String, withExtras: Boolean = false): DataFrame = {
-    // ts arrives as long nanos (see table()); integer-divide to micros —
+    // ts arrives as long nanos (see events()); integer-divide to micros —
     // the same truncation DuckDB applies reading ns parquet — and keep the
     // result TIMESTAMP_NTZ so every derived timestamp stays naive end-to-end
     // (Spark then writes isAdjustedToUTC=false parquet, matching the naive

@@ -153,8 +153,8 @@ object Similarity {
     // NOTE the frame carries the embedding per (vector, band) — numBands×
     // the embedding bytes of a slim (band, key, id) persist. That is the
     // deliberate trade, and the round-9 cache-pressure experiment
-    // (tools/LshCachePressure, PLANS.md r9 §2) measured all three options
-    // at the 100× sweep endpoint: the slim form re-joins embeddings onto
+    // (tools/LshCachePressure, last in c18d002; PLANS.md r9 §2) measured
+    // all three options at the 100× sweep endpoint: the slim form re-joins embeddings onto
     // the FULL candidate stream, and its pair-id distinct EXHAUSTED 78 GB
     // of shuffle-spill disk before completing (1.8× slower already at
     // 10×); MEMORY_AND_DISK vs DISK_ONLY on the fat frame is a wash
@@ -628,8 +628,8 @@ object Similarity {
     * unpersisted, the m code expressions ride into the pipelined join
     * chain as UNEVALUATED projections and re-inline at every consumer —
     * measured 68 s for the 8-join chain at sf10 vs 2.9 s materialized
-    * (PqDiag; cost grew ~4× per join-count doubling, the duplicated-
-    * subtree signature). It is also the operator's story: in production
+    * (tools/PqDiag, last in c18d002; cost grew ~4× per join-count
+    * doubling, the duplicated-subtree signature). It is also the operator's story: in production
     * the codes frame IS the PQ index, a materialized m-bytes-per-vector
     * table that outlives any single query. `start` may carry extra
     * columns (ivfPqTopK threads `cluster` through). */

@@ -27,8 +27,6 @@ object TextAnalysis {
   def hash32(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast("long")
 
-  /** SQL fragment of [[hash32]] usable inside higher-order lambdas. */
-  val hash32Sql: String = "CAST(conv(substr(md5(%s), 1, 8), 16, 10) AS BIGINT)"
 
   /** Portable 60-bit hash (first 15 md5 hex digits). Use where the hash is
     * a HARD membership key rather than a sketch ingredient: 32 bits
@@ -50,7 +48,7 @@ object TextAnalysis {
   /** The built-in-only tokenize this engine started with: a per-row regex
     * compile inside `String.split` plus two intermediate string copies.
     * Kept as the reference model for the [[withTokens]] parity test and
-    * the A/B in tools/TokenBench. */
+    * the A/B in tools/TokenBench (last in c18d002). */
   def splitTokens(textCol: String): Column =
     split(trim(lower(col(textCol))), "\\s+")
 
@@ -62,18 +60,6 @@ object TextAnalysis {
               | ELSE array_distinct(transform(sequence(0, size(toks)-$n),
               |        i -> concat_ws(' ', $parts))) END""".stripMargin))
   }
-
-  /** Shingles hashed ONCE into `hs` (one md5 per shingle). Downstream
-    * sketches (minhash perms, simhash bits) loop over these integers —
-    * never recompute the md5 inside a per-perm/per-bit lambda. */
-  def withHashedShingles(docs: DataFrame, n: Int = 3): DataFrame =
-    withShingles(docs, n).withColumn("hs",
-      expr(s"transform(shingles, s -> ${hash32Sql.format("s")})"))
-
-  /** Tokens hashed once into `ths` (simhash input — keeps multiplicity). */
-  def withHashedTokens(docs: DataFrame): DataFrame =
-    withTokens(docs).withColumn("ths",
-      expr(s"transform(toks, t -> ${hash32Sql.format("t")})"))
 
   /** Basic stats: token counts (whitespace + word-regex), char counts,
     * average token length. */
@@ -314,12 +300,8 @@ object TextAnalysis {
    * Serialized blocks are a handful of byte arrays per partition; the
    * per-round deserialize cost is one pass over data the phase scans
    * anyway. */
-  // GRAFT_BPE_DESER_CKPT=1 restores the deserialized level — the A/B
-  // reproduction arm for the GC measurement, like GRAFT_BPE_NO_FREE
-  private[graft] def CheckpointLevel =
-    if (sys.env.contains("GRAFT_BPE_DESER_CKPT"))
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+  private[graft] val CheckpointLevel =
+    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
 
   def bpeTrainMergesCarried(docs: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
@@ -1217,7 +1199,8 @@ object TextAnalysis {
 
   /** The chained-regexp_replace scrub this engine started with: three
     * Matcher passes per row, each with a UTF-16 round-trip. Reference
-    * model for [[scrub]]'s parity test and the A/B in tools/AbBench. */
+    * model for [[scrub]]'s parity test and the A/B in tools/AbBench
+    * (last in c18d002). */
   def scrubRegex(docs: DataFrame): DataFrame =
     docs.select(
       col("doc_id"),

@@ -91,8 +91,8 @@ case class ApproxPercentileRewrite() extends Rule[LogicalPlan] {
  * predicate pushdown substitutes the FULL expression into the filter, so
  * every text-grain explode evaluates the tokenize TWICE per row — filter
  * then project (codegen CSE dedups only within one operator). Measured in
- * tools/TokenBench at sf10: stripping halves the explode path (2.04 →
- * 1.01 s over 27M tokens).
+ * tools/TokenBench (last in c18d002) at sf10: stripping halves the
+ * explode path (2.04 → 1.01 s over 27M tokens).
  *
  * Semantics-preserving by construction: `Generate(outer=false)` already
  * emits nothing for null or empty generator input, so these two conjuncts

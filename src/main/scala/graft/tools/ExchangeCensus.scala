@@ -99,19 +99,13 @@ object ExchangeCensus {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val minDup = if (args.length > 1) args(1).toInt else 1
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.Session.local(4,
       // AQE OFF: preparation must run ReuseExchangeAndSubquery so a
       // surviving canonical duplicate is a genuine reuse miss
-      .config("spark.sql.adaptive.enabled", "false")
+      "spark.sql.adaptive.enabled" -> "false",
       // broadcast OFF: audit the shuffle shape a 100 TB corpus plans,
       // not the broadcast shape the test sf's size estimates pick
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.SketchExprs.register(spark)
     sys.props("graft.frame.cache.disable") = "1"

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
  *    linear indicts the ENGINE, never the generator. Replica-unique
  *    tokens also give the corpus open (Heaps-law) vocabulary growth.
  *    Two earlier versions were artifact-bearing, both caught by
- *    measurement (tools/LshProbe, tools/SparseProbe):
+ *    measurement (tools/LshProbe, tools/SparseProbe at c18d002):
  *    (a) every-3rd-position replacements drawn from the corpus's own
  *    closed 31-token vocabulary made replicas r and r+31 byte-identical
  *    twins (the rewrite pattern is periodic in r mod 31) and held the
@@ -76,16 +76,7 @@ object ScaleUp {
     val src = args(0)
     val dest = args(1)
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is TIMESTAMP(NANOS): read as long nanos (the engine's
-      // Tables adapter handles a BIGINT ts identically)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     val reps = spark.range(0, replicas).select(col("id").as("_r"))

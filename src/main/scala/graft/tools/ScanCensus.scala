@@ -69,13 +69,7 @@ object ScanCensus {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val minExcess = if (args.length > 1) args(1).toInt else 1
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.SketchExprs.register(spark)
     // FrameCache off so the census sees the real computation pipelines

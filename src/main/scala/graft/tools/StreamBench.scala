@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.clean.CleanStage
@@ -93,19 +93,11 @@ object StreamBench {
       .find(a => !a.startsWith("knee=") && !a.startsWith("provider=") &&
         a != "recovery")
       .map(_.toInt).getOrElse(if (recovery) 30 else 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
       // recentProgress retains 100 updates by default — the per-batch
       // batch_ms/state_rows trajectories must survive runs with >100 slices
-      .config("spark.sql.streaming.numRecentProgressUpdates",
+      "spark.sql.streaming.numRecentProgressUpdates" ->
         math.max(100, slices + 16).toString)
-      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // --- clean-topic archive: events -> raw strings -> validate+enrich

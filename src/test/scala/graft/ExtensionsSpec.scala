@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.plans.GraftExtensions
-
 /** The approx-distinct optimizer rule + extension-registered functions. */
 class ExtensionsSpec extends SparkSpec {
 
@@ -11,13 +9,7 @@ class ExtensionsSpec extends SparkSpec {
     val base = spark // force shared-session init first
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val s2 = Session.local(4)
     try f(s2)
     finally {
       SparkSession.setActiveSession(base)

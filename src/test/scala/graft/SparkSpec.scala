@@ -6,17 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one per forked test JVM). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      // every suite runs under the shipped session extensions, same as
-      // Verify/Bench — regressions in the injected rules surface here
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    // the factory session Verify/Bench run under — regressions in the
+    // injected extension rules surface here
+    val s = Session.local(4, "spark.sql.warehouse.dir" -> "/tmp/graft-warehouse")
     s.sparkContext.setLogLevel("WARN")
     s
   }

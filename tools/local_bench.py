@@ -6,10 +6,12 @@ own per-query lower-median-of-2, Bench's default), then takes the
 cross-JVM per-query median and writes the artifact with the env stamps
 of all three runs. Machine-load caveat: run this on an otherwise idle
 host — the env stamps exist so a reader can reject a contaminated run.
+Each Bench JVM waits for its own launch gate (Bench.LoadGate), so a JVM
+started inside the previous one's load tail waits for it to decay.
 
 Usage: python3 tools/local_bench.py <round> [sfDir] [jvms]
 """
-import json, os, statistics, subprocess, sys, time
+import json, os, statistics, subprocess, sys
 
 rnd = sys.argv[1]
 sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
@@ -17,32 +19,10 @@ jvms = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 artifact = os.path.join(repo, "bench.json")
 
-def wait_quiet(gate=2.0, timeout_s=300):
-    """Let the 1-min loadavg decay below `gate` before launching a JVM.
-    The r17 artifact's JVM 3 started at load 6.69 — the PREVIOUS bench
-    JVM's own 32-thread tail — and 8 sub-second queries read >1.35x
-    inflated, each needing a manual quiet-machine probe to disprove
-    (PLANS r17 §7). Loadavg is a lagging indicator, so the tail is
-    mostly phantom, but gating is free and makes the stamps themselves
-    defend the run. Bounded: a busy shared host proceeds after
-    timeout with the honest stamp."""
-    load = os.getloadavg()[0]
-    deadline = time.time() + timeout_s
-    while load >= gate and time.time() < deadline:
-        print(f"[local_bench] load {load:.2f} >= {gate} — waiting", flush=True)
-        time.sleep(15)
-        load = os.getloadavg()[0]
-
-
 runs = []
 for i in range(jvms):
     if os.path.exists(artifact):
         os.remove(artifact)
-    # gate EVERY launch, JVM 1 included: a bench started right after other
-    # heavy work (a prior sweep leg — the exact r17 failure mode) would
-    # otherwise record an inflated JVM-1 leg ungated and lean entirely on
-    # the cross-JVM median to discard it; the gate is free on an idle host
-    wait_quiet()
     # REF=none: the 3-JVM protocol's contamination defense is its own
     # cross-JVM median; Bench's outlier-retry pass (which compares against
     # a PRIOR local artifact) must not add non-timing work to these runs

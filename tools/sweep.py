@@ -24,13 +24,14 @@ ratio (previous round's SWEEP100 artifact, parsed from the table) by
 believed; the table then carries an `isolated_s` column for those
 queries, and the final verdict column uses min(suite, isolated).
 Probes additionally fire for any ratio >= the 25x absolute floor and
-for the top-3 ratios regardless of floor, and each probe LOAD-GATES
-itself (waits for 1-min loadavg < GRAFT_SWEEP_LOAD_GATE, default 1.5,
-stamping start_load into its log line): the r12 q_bucketed_join probe
-started inside the suite's decaying load tail at loadavg >10 and read
-garbage that cost a manual re-adjudication.
+for the top-3 ratios regardless of floor. Every suite run and probe is a
+Bench launch, and Bench LOAD-GATES itself (Bench.LoadGate, 1-min
+loadavg < 2.0); each probe line stamps the load Bench saw before its
+gate (start_load) and how long the gate held it: the r12
+q_bucketed_join probe started inside the suite's decaying load tail at
+loadavg >10 and read garbage that cost a manual re-adjudication.
 """
-import json, os, re, subprocess, sys, time
+import json, os, re, subprocess, sys
 
 # --probe-band <ratio> [scaledDir] [refSweep]: one-shot mode (VERDICT r14
 # item 1). No suite runs — parse the reference sweep artifact, select every
@@ -199,15 +200,11 @@ def bench(sf_dir):
                SPARK_GRAFT_BENCH_ROWS=",".join(pair_queries),
                SPARK_GRAFT_BENCH_REF="none",
                GRAFT_NO_FRAME_CACHE=os.environ.get("GRAFT_NO_FRAME_CACHE", "1"))
-    # load-gate the SUITE launch too, not just the probes: the r17 sweep's
+    # the SUITE launch is load-gated too, by Bench itself, at the same
+    # threshold as the probes that adjudicate its outliers: the r17 sweep's
     # sf10 leg started inside the sf0.1 leg's decaying 32-thread tail, and
     # a whole family of lineitem/shingle queries read ~2x readings that a
-    # second-hour idle probe disproved (PLANS r17 §8). Bounded + stamped
-    # by Bench's own env record either way. The gate comes from the shared
-    # GRAFT_SWEEP_LOAD_GATE default — the suite must not launch under a
-    # looser, non-configurable threshold than the probes that adjudicate
-    # its outliers.
-    wait_quiet(timeout_s=300)
+    # second-hour idle probe disproved (PLANS r17 §8)
     print(f"[sweep] benching {sf_dir} (runs={runs}, skip={sorted(exclude)})", flush=True)
     run(["sbt", "-batch", "runMain graft.Bench"], env=env)
     if not os.path.exists(artifact):
@@ -217,49 +214,32 @@ def bench(sf_dir):
         return json.load(f)
 
 
-def wait_quiet(gate=None, timeout_s=900):
-    """Block until 1-minute loadavg drops below the gate (default 1.5,
-    GRAFT_SWEEP_LOAD_GATE to override). The r12 q_bucketed_join probe
-    started at loadavg >10 — the suite's decaying load tail — and read a
-    garbage 13.87 s that cost a manual re-adjudication commit; probes gate
-    themselves now instead of relying on the operator to notice. Returns
-    the load observed when the gate opened (stamped into the probe line so
-    the artifact proves the reading was quiet)."""
-    gate = gate if gate is not None else float(
-        os.environ.get("GRAFT_SWEEP_LOAD_GATE", "1.5"))
-    deadline = time.time() + timeout_s
-    load = os.getloadavg()[0]
-    while load >= gate and time.time() < deadline:
-        print(f"[sweep] load {load:.2f} >= gate {gate} — waiting", flush=True)
-        time.sleep(20)
-        load = os.getloadavg()[0]
-    if load >= gate:
-        print(f"[sweep] WARNING: load gate never opened (load {load:.2f} "
-              f"after {timeout_s}s) — probing anyway, treat with suspicion",
-              flush=True)
-    return load
-
-
 def probe_isolated(q, sf_dir):
     """One fresh-JVM re-run of a single query (the r9 'any outlier gets
     one isolated probe before it is believed' rule). Returns the lower
-    median seconds, or None if the probe itself failed."""
+    median seconds, or None if the probe itself failed. The probe line
+    stamps the artifact's launch-gate record, so it proves the reading
+    was quiet (or says the gate gave up)."""
     if os.path.exists(artifact):
         os.remove(artifact)
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS="32",
                SPARK_GRAFT_BENCH_RUNS=runs, SPARK_GRAFT_BENCH_ONLY=q,
                SPARK_GRAFT_BENCH_REF="none",
                GRAFT_NO_FRAME_CACHE=os.environ.get("GRAFT_NO_FRAME_CACHE", "1"))
-    load = wait_quiet()
-    print(f"[sweep] isolated probe: {q} @ {sf_dir} start_load={load:.2f}",
-          flush=True)
     try:
         run(["sbt", "-batch", "runMain graft.Bench"], env=env)
         with open(artifact) as f:
-            t = json.load(f)["queries"].get(q)
-        return t if t and t > 0 else None
+            r = json.load(f)
     except SystemExit:
+        print(f"[sweep] isolated probe: {q} @ {sf_dir} failed", flush=True)
         return None
+    gate = r["env"]["gate"]
+    print(f"[sweep] isolated probe: {q} @ {sf_dir} "
+          f"start_load={gate['pre_load']:.2f} gate_waited={gate['waited_s']}s"
+          + ("" if gate["opened"] else " (gate never opened — treat with "
+             "suspicion)"), flush=True)
+    t = r["queries"].get(q)
+    return t if t and t > 0 else None
 
 
 if REPROBE is not None:
